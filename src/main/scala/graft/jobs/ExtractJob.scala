@@ -16,6 +16,11 @@ import graft.pipeline.Checkpoint
   * (resume-safe: re-launching after a failure processes only uncommitted
   * or drifted buckets), prints a one-line JSON summary.
   *
+  * `profile` names the run (app name, default run id) but no longer changes
+  * the checkpointed job: the extraction shuffle is keyed on the output
+  * bucket, and the salt fan-out `saltBuckets` was the profile's only effect
+  * on it.
+  *
   * On a cluster this runs under whatever master spark-submit provides;
   * standalone (no master set) it falls back to local[*] for the sandbox.
   */

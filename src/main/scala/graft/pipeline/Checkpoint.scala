@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.TableIO
@@ -20,9 +21,13 @@ import graft.model.PipelineConf
   *   1. read manifest (if any) → committed (bucket, fingerprint) pairs;
   *   2. fingerprint current input per bucket; a bucket is DONE iff its
   *      manifest fingerprint equals the current one;
-  *   3. extract only pending buckets; write with dynamic partition
-  *      overwrite keyed by bucket (idempotent under task retry AND under
-  *      whole-job replay — a half-written bucket is simply overwritten);
+  *   3. extract only pending buckets, after one shuffle keyed on the
+  *      bucket ([[placeByBucket]]): a bucket is extracted and written by
+  *      one task (several when buckets are fewer than tasks), so each task
+  *      opens one writer per bucket it holds and a cold run writes one
+  *      data file per bucket. Write with dynamic partition overwrite keyed
+  *      by bucket (idempotent under task retry AND under whole-job replay —
+  *      a half-written bucket is simply overwritten);
   *   4. append manifest rows LAST (data-then-manifest ordering: a crash
   *      between 3 and 4 re-runs the bucket, never skips it).
   *
@@ -32,6 +37,8 @@ import graft.model.PipelineConf
   * manifest is that lifecycle made durable and partition-grained.
   */
 object Checkpoint {
+
+  private val log = LogManager.getLogger(getClass.getName.stripSuffix("$"))
 
   /** Version of the bucket-fingerprint FORMULA (not the data): bumped
     * whenever [[fingerprints]] changes what it hashes. The stamp does NOT
@@ -83,6 +90,30 @@ object Checkpoint {
       .select(col("bucket"),
         xxhash64(col("hx"), col("hs").cast("string")).as("input_fingerprint"),
         col("rows_in"), col("bytes_in"))
+
+  /** Places rows that carry `bucket` and `url` on `partitions` (P) tasks
+    * for the partitioned write. The i-th of the k sorted `buckets` owns
+    * tasks [i·P/k, (i+1)·P/k), at least one. With k ≥ P each bucket lands
+    * in exactly one task and is written as one file. With k < P a second
+    * url hash spreads each bucket over ⌊P/k⌋ or ⌈P/k⌉ tasks, so the kernel
+    * keeps P tasks and the write opens at most P files; that hash is
+    * murmur3 `hash`, because the bucket's own xxhash64 is constant mod n
+    * within a bucket. Buckets are ranked rather than used as task ids so
+    * that a resume of a few pending buckets also runs on P tasks. A heavy
+    * host needs no salt here: a bucket is a url hash, so the host's rows
+    * already spread over every bucket.
+    */
+  def placeByBucket(rows: DataFrame, buckets: Seq[Int], partitions: Int): DataFrame = {
+    val k = buckets.length.toLong
+    val first = Array.fill(buckets.max + 1)(0)
+    val span = Array.fill(buckets.max + 1)(1)
+    buckets.sorted.zipWithIndex.foreach { case (b, i) =>
+      first(b) = (i * partitions / k).toInt
+      span(b) = math.max(((i + 1) * partitions / k).toInt - first(b), 1)
+    }
+    def at(a: Array[Int]) = element_at(typedLit(a.toSeq), col("bucket") + 1)
+    rows.repartitionById(partitions, at(first) + pmod(hash(col("url")), at(span)))
+  }
 
   /** Run or resume. Returns the summary; output lands at dataPath(outDir). */
   def run(pages: DataFrame, outDir: String, io: TableIO, conf: PipelineConf,
@@ -141,7 +172,7 @@ object Checkpoint {
     val versionBreak = latestRows.count { case (b, (_, rowsIn, fpv)) =>
       rowsIn > 0 && fpv != FingerprintVersion && pendingBuckets.contains(b) }
     if (versionBreak > 0)
-      System.err.println(s"[checkpoint] $versionBreak pending bucket(s) were " +
+      log.warn(s"$versionBreak pending bucket(s) were " +
         s"committed under fingerprint version != $FingerprintVersion " +
         "(formula change): re-extracting them once under the current formula")
 
@@ -180,12 +211,15 @@ object Checkpoint {
       io.deletePartitions(spark, dataPath(outDir), "bucket", toClean.sorted)
 
     if (pendingBuckets.nonEmpty) {
-      val todo = pages
-        .withColumn("bucket", bucketCol(col("url"), numBuckets))
+      val todo = pages.select(col("url"), col("html"),
+          bucketCol(col("url"), numBuckets).as("bucket"))
         .where(col("bucket").isin(pendingBuckets.toSeq: _*))
-      val heavy = Salting.detectHeavyHosts(todo)
-      val extracted = Extract.runWithHosts(todo.select("url", "html"), conf, heavy)
-        .toDF()
+      val placed =
+        if (conf.shufflePartitions > 0)
+          placeByBucket(todo, pendingBuckets.toSeq, conf.shufflePartitions)
+        else todo // pre-partitioned input, as in Extract.run
+      // the bucket is recomputed after the narrow kernel, in the same task
+      val extracted = Extract.runNarrow(placed).toDF()
         .withColumn("bucket", bucketCol(col("url"), numBuckets))
       // 3: data first (dynamic overwrite per bucket — idempotent)
       io.overwritePartitions(extracted, dataPath(outDir), "bucket")

@@ -18,6 +18,75 @@ class CheckpointSpec extends AnyFunSuite {
   private def freshDir(): String =
     Files.createTempDirectory("ckpt").toString
 
+  /** Runs `body` and returns what it logged at WARN or above through
+    * Checkpoint's log4j logger.
+    */
+  private def capturingLog[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.{LogManager, core}
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new core.appender.AbstractAppender("checkpoint-capture", null, null,
+        true, core.config.Property.EMPTY_ARRAY) {
+      override def append(e: core.LogEvent): Unit =
+        logged.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger("graft.pipeline.Checkpoint").asInstanceOf[core.Logger]
+    logger.addAppender(appender)
+    try (body, logged.toArray(Array.empty[String]).toSeq)
+    finally { logger.removeAppender(appender); appender.stop() }
+  }
+
+  /** Data files per `bucket=k` directory of a checkpoint output. */
+  private def dataFiles(out: String): Map[Int, Seq[String]] =
+    new java.io.File(Checkpoint.dataPath(out)).listFiles()
+      .filter(_.getName.startsWith("bucket="))
+      .map(d => d.getName.stripPrefix("bucket=").toInt ->
+        d.list().filter(f => f.startsWith("part-") && f.endsWith(".parquet")).toSeq)
+      .toMap
+
+  test("bucket-keyed shuffle: one data file per bucket, every url exactly once") {
+    // one host holds ~20% of the rows; each bucket is still written by
+    // exactly one task, so it gets exactly one file
+    val pages = SyntheticPages.fromDocuments(spark, "/root/testdata/sf0.001").cache()
+    val out = freshDir()
+    val s = Checkpoint.run(pages, out, ParquetIO, conf, "one-file", numBuckets = 16)
+    val files = dataFiles(out)
+    assert(files.size == s.bucketsTotal && s.bucketsTotal == 16)
+    assert(files.forall(_._2.length == 1), s"files per bucket: $files")
+    val urls = spark.read.parquet(Checkpoint.dataPath(out)).groupBy("url").count()
+    assert(urls.count() == pages.select("url").distinct().count())
+    assert(urls.where(col("count") =!= 1).count() == 0, "a url written twice")
+    pages.unpersist()
+  }
+
+  test("fewer buckets than tasks: a url sub-key keeps the kernel parallel, files <= P") {
+    val pages = SyntheticPages.fromDocuments(spark, "/root/testdata/sf0.001")
+    val out = freshDir()
+    Checkpoint.run(pages, out, ParquetIO, conf, "sub-key", numBuckets = 4)
+    val files = dataFiles(out).values.flatten.toSeq
+    // a part file is named after the task that wrote it, and the kernel
+    // runs in the writing task: distinct names = non-empty kernel tasks
+    val tasks = files.map(_.split('-')(1)).distinct
+    assert(tasks.length > 4, s"kernel tasks: $tasks")
+    assert(files.length <= conf.shufflePartitions, s"data files: $files")
+    assert(spark.read.parquet(Checkpoint.dataPath(out)).count() == pages.count())
+  }
+
+  test("bucket placement is at least as balanced as host salting on a skewed corpus") {
+    import PipelineSpec.maxMean
+    val pages = SyntheticPages.fromDocuments(spark, "/root/testdata/sf0.001").select("url").cache()
+    val p = conf.shufflePartitions
+    val heavy = Salting.detectHeavyHosts(pages, sampleFraction = 1.0)
+    assert(heavy.nonEmpty, "the corpus must be host-skewed")
+    val salted = maxMean(Salting.saltedRepartition(pages, p, heavy, conf.saltBuckets))
+    Seq(16, 4).foreach { n =>
+      val placed = Checkpoint.placeByBucket(
+        pages.withColumn("bucket", Checkpoint.bucketCol(col("url"), n)), 0 until n, p)
+      assert(maxMean(placed) <= salted, s"$n buckets: ${maxMean(placed)} vs salted $salted")
+    }
+    pages.unpersist()
+  }
+
   test("full run commits all buckets; immediate re-run processes zero") {
     val out = freshDir()
     val pages = SyntheticPages.fromDocuments(spark, "/root/testdata/sf0.001").cache()
@@ -306,17 +375,13 @@ class CheckpointSpec extends AnyFunSuite {
         "rows_out", "job_run_id", "committed_seq", "fp_version")
     old.write.mode("overwrite").parquet(Checkpoint.manifestPath(out))
 
-    val errBuf = new java.io.ByteArrayOutputStream()
-    val prevErr = System.err
-    val s = try {
-      System.setErr(new java.io.PrintStream(errBuf, true, "UTF-8"))
-      Checkpoint.run(pages, out, ParquetIO, conf, "after-break", numBuckets = 8)
-    } finally System.setErr(prevErr)
+    val (s, logged) = capturingLog(
+      Checkpoint.run(pages, out, ParquetIO, conf, "after-break", numBuckets = 8))
     assert(s.bucketsPending == s.bucketsTotal,
       s"formula break must recompute all buckets: $s")
-    val err = errBuf.toString("UTF-8")
-    assert(err.contains("fingerprint version") && err.contains("8 pending bucket(s)"),
-      s"recompute must be labeled as a format break, got: $err")
+    assert(logged.exists(m => m.contains("fingerprint version") &&
+        m.contains("8 pending bucket(s)")),
+      s"recompute must be labeled as a format break, got: $logged")
 
     val s2 = Checkpoint.run(pages, out, ParquetIO, conf, "settled", numBuckets = 8)
     assert(s2.bucketsPending == 0, s"second run must settle: $s2")

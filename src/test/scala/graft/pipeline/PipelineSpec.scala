@@ -79,10 +79,7 @@ class PipelineSpec extends AnyFunSuite {
 
     // partition-size balance: max/mean ratio drops vs unsalted host partitioning
     val p = 16
-    def maxMean(df: org.apache.spark.sql.DataFrame): Double = {
-      val sizes = df.rdd.mapPartitions(it => Iterator(it.size)).collect().filter(_ > 0)
-      sizes.max.toDouble / (sizes.sum.toDouble / sizes.length)
-    }
+    import PipelineSpec.maxMean
     val unsalted = pages.select("url").repartition(p, Salting.hostCol(col("url")))
     val salted = Salting.saltedRepartition(pages.select("url"), p, heavy, 8)
     assert(maxMean(salted) < maxMean(unsalted))
@@ -129,5 +126,13 @@ class PipelineSpec extends AnyFunSuite {
     assert(g.text == "col1 col2\nv1 v2\nv3 v4")
     val t = out("http://t.example/type0")
     assert(t.status == "processed" && t.text == "Hi")
+  }
+}
+
+object PipelineSpec {
+  /** Placement balance: largest over mean row count of the non-empty partitions. */
+  def maxMean(df: org.apache.spark.sql.DataFrame): Double = {
+    val sizes = df.rdd.mapPartitions(it => Iterator(it.size)).collect().filter(_ > 0)
+    sizes.max.toDouble / (sizes.sum.toDouble / sizes.length)
   }
 }
