@@ -518,7 +518,7 @@ object SparkEntry {
     // on the round-6 regenerated corpus nprobe=12 reads recall 0.8/1.0/0.6
     // at sf0.001/0.01/0.1 (RecallProbe) — any partial probe is a red oracle
     // waiting for the next regeneration. Pruned-probe recall stays gated in
-    // SimilaritySpec (mean recall@nprobe=8 over 10 queries ≥ 0.5).
+    // SimilaritySpec (mean recall@nprobe=8 over 10 queries ≥ 0.6).
     "s03_ivf_topk" -> ((s, dir) => {
       val emb = embeddings(s, dir)
       val q = emb.where(col("vec_id") === 0)

@@ -2,40 +2,38 @@ package graft.jobs
 
 import org.apache.spark.sql.SparkSession
 import graft.io.ParquetIO
-import graft.model.Profiles
+import graft.model.PipelineConf
 import graft.pipeline.Checkpoint
 
 /** Production batch entry point (SURVEY §7.1 jobs/ExtractJob):
   *
   * {{{
   * spark-submit --class graft.jobs.ExtractJob ocrmainspark.jar \
-  *   <pagesDir> <outDir> [profile=balanced] [buckets=64] [runId]
+  *   <pagesDir> <outDir> [buckets=64] [runId=extract]
   * }}}
   *
   * Reads the pages table, runs the checkpointed exactly-once extraction
   * (resume-safe: re-launching after a failure processes only uncommitted
-  * or drifted buckets), prints a one-line JSON summary.
-  *
-  * `profile` names the run (app name, default run id) but no longer changes
-  * the checkpointed job: the extraction shuffle is keyed on the output
-  * bucket, and the salt fan-out `saltBuckets` was the profile's only effect
-  * on it.
+  * or drifted buckets), prints a one-line JSON summary. A `buckets` value
+  * that is not a positive integer prints the usage line and exits 2.
   *
   * On a cluster this runs under whatever master spark-submit provides;
   * standalone (no master set) it falls back to local[*] for the sandbox.
   */
 object ExtractJob {
   def main(args: Array[String]): Unit = {
-    if (args.length < 2) {
-      System.err.println("usage: ExtractJob <pagesDir> <outDir> [profile] [buckets] [runId]")
+    def usage(): Nothing = {
+      System.err.println("usage: ExtractJob <pagesDir> <outDir> [buckets] [runId]")
       sys.exit(2)
     }
+    if (args.length < 2) usage()
     val Array(pagesDir, outDir) = args.take(2)
-    val profile = if (args.length > 2) args(2) else "balanced"
-    val buckets = if (args.length > 3) args(3).toInt else 64
-    val runId = if (args.length > 4) args(4) else s"extract-$profile"
+    val buckets =
+      if (args.length > 2) args(2).toIntOption.filter(_ > 0).getOrElse(usage())
+      else 64
+    val runId = if (args.length > 3) args(3) else "extract"
 
-    val builder = SparkSession.builder().appName(s"graft-extract-$profile")
+    val builder = SparkSession.builder().appName("graft-extract")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
     val spark = (if (sys.props.contains("spark.master") ||
@@ -46,8 +44,7 @@ object ExtractJob {
     spark.sparkContext.setLogLevel("WARN")
 
     val pages = ParquetIO.read(spark, pagesDir)
-    val summary = Checkpoint.run(pages, outDir, ParquetIO,
-      Profiles.forName(profile), runId, buckets)
+    val summary = Checkpoint.run(pages, outDir, ParquetIO, PipelineConf(), runId, buckets)
     println(s"""{"job":"extract","run_id":"$runId","buckets_total":${summary.bucketsTotal},""" +
       s""""buckets_pending":${summary.bucketsPending},"buckets_committed":${summary.bucketsCommitted},""" +
       s""""rows_in":${summary.rowsIn},"bytes_in":${summary.bytesIn},"out":"${Checkpoint.dataPath(outDir)}"}""")

@@ -31,7 +31,7 @@ final case class ExtractedDoc(
   text: String,         // blocks/pages joined "\n\n" — the byte-identical gate
   spans: Seq[SpanRow],
   tables: Seq[TableRow],
-  confidence: Double,   // 0..100 (thresholds 60/80, constants/__init__.py:12,15-16)
+  confidence: Double,   // 0..100 (see Thresholds)
   page_count: Int,
   charset: String,
   status: String,       // processed | error (models/common.py:13-20 lifecycle)
@@ -40,59 +40,26 @@ final case class ExtractedDoc(
   word_count: Int,
   metadata: Map[String, String])
 
-/** Per-partition lineage/manifest row (SURVEY.md §7.2 step 8). */
-final case class ManifestRow(
-  partition_id: Int,
-  input_fingerprint: String,
-  rows_in: Long,
-  rows_out: Long,
-  bytes_in: Long,
-  wall_ms: Long,
-  job_run_id: String)
-
-/** Immutable pipeline configuration — the rebuild of SystemConfig
-  * (system_config.py:37-78): quality profiles survive as named presets.
+/** Pipeline configuration: the one setting the code reads, the kernel
+  * stage's partition count. `0` runs the kernel on the input's own
+  * partitioning (no runtime shuffle); `> 0` shuffles onto that many
+  * partitions, keyed by (host, salt) in `Extract.run` and by output bucket
+  * in `Checkpoint.run`.
   */
-final case class PipelineConf(
-  profile: String = "balanced",          // fast | balanced | high (system_config.py:18-34)
-  confidenceThreshold: Double = 60.0,    // constants/__init__.py:12
-  highQualityThreshold: Double = 80.0,   // constants/__init__.py:15-16
-  minPdfBytes: Int = 1024,               // file_utils.py:64-66
-  shufflePartitions: Int = 32,
-  saltBuckets: Int = 8)
+final case class PipelineConf(shufflePartitions: Int = 32)
 
+/** Reference quality thresholds on the 0..100 confidence scale
+  * (constants/__init__.py:12,15-16).
+  */
 object Thresholds {
   val MediumQuality = 60.0
   val HighQuality = 80.0
 }
 
-/** Quality-profile presets (C3/SystemConfig profiles, system_config.py:18-34).
-  * DPI survives only as lineage metadata — there is no rasterization in the
-  * Spark path (SURVEY E1) — but thresholds and salting really change the job.
+/** The reference's fast/balanced/high profiles (system_config.py:18-34)
+  * set DPI, a confidence threshold and an engine, none of which this
+  * rebuild reads; only the default configuration survives, by name.
   */
 object Profiles {
-  val Fast = PipelineConf(profile = "fast", confidenceThreshold = 50.0,
-    saltBuckets = 4)
-  val Balanced = PipelineConf(profile = "balanced", confidenceThreshold = 60.0)
-  val High = PipelineConf(profile = "high", confidenceThreshold = 80.0,
-    saltBuckets = 16)
-
-  def forName(name: String): PipelineConf = name match {
-    case "fast" => Fast
-    case "high" => High
-    case _ => Balanced
-  }
-
-  /** C3 per-doc-type optimal-config lookup (pdf_analyzer.py:124-176) —
-    * the reference's engine/dpi/flags table, kept as lineage metadata so
-    * downstream consumers can reproduce its routing decisions.
-    */
-  def optimalFor(docType: String): Map[String, String] = docType match {
-    case "scanned" => Map("engine" -> "layout", "dpi" -> "300", "strategy" -> "full_preprocessing")
-    case "native_text" => Map("engine" -> "basic", "dpi" -> "150", "strategy" -> "fast_native")
-    case "table_heavy" => Map("engine" -> "layout", "dpi" -> "250", "strategy" -> "table_focused")
-    case "image_heavy" => Map("engine" -> "layout", "dpi" -> "300", "strategy" -> "image_focused")
-    case "html" => Map("engine" -> "boilerplate", "dpi" -> "0", "strategy" -> "block_classify")
-    case _ => Map("engine" -> "layout", "dpi" -> "300", "strategy" -> "balanced")
-  }
+  val Balanced = PipelineConf()
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.model.Thresholds
 
 /** End-to-end training-data curation: the keep/drop decision that composes
   * the pipeline's quality, language and dedup signals into one labeled
@@ -11,8 +12,8 @@ import org.apache.spark.sql.functions._
   *   1. `dup`         — the document loses exact n-gram dedup: some OTHER
   *                      doc with a smaller id matches at Jaccard ≥ dupTau
   *                      (min-id canonical keeps, all later members drop);
-  *   2. `low_quality` — qualityScore < minQuality (reference threshold 60,
-  *                      constants/__init__.py:12);
+  *   2. `low_quality` — qualityScore < minQuality (default
+  *                      `Thresholds.MediumQuality`);
   *   3. `lang`        — language ID is `und` (no stopword evidence);
   *   4. `keep`.
   *
@@ -36,20 +37,9 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
 
-  /** @param sharedShingles an already-built (and typically persisted)
-    *   [[Dedup.shingleSets]] frame (`id` long, `sh`) to reuse instead of
-    *   re-tokenizing `docs` — the production pairing runs curation right
-    *   after MinHash dedup on the SAME corpus, and the shingle scratch is
-    *   the expensive artifact (one full tokenize pass). The frame's `id`
-    *   must equal this call's dedup key: `idCol` cast to long for a
-    *   numeric-id corpus (i.e. the d04-d07 scratch verbatim), else
-    *   `xxhash64(idCol)`. It must cover every row of `docs` (a superset is
-    *   correct, just wasted candidate work). Caller keeps ownership:
-    *   curate persists/releases only scratch it builds itself.
-    */
   def curate(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-             dupTau: Double = 0.5, minQuality: Double = 60.0,
-             sharedShingles: Option[DataFrame] = None): DataFrame = {
+             dupTau: Double = 0.5,
+             minQuality: Double = Thresholds.MediumQuality): DataFrame = {
     // the dedup stack keys on Long ids, but the pipeline's own doc_id is a
     // sha256 HEX STRING — casting that to long yields null and the typed
     // shingle path dies. Non-numeric ids key internally on xxhash64(id)
@@ -62,20 +52,10 @@ object Curation {
       if (idIsNumeric) col(idCol).cast("long") else xxhash64(col(idCol))
     val keyed = docs.select(key.as("__cid"), col(textCol))
     // one tokenize pass feeds the combined (sh, sig) scratch; the fused
-    // jaccardVerify est-filters and exact-verifies in one pair pass. A
-    // caller-supplied shingle frame (id, sh — no signatures) keeps the
-    // two-stage composition, bit-identical by construction.
-    val (verifiedAll, release) = sharedShingles match {
-      case Some(sh) =>
-        val sigs = Dedup.signaturesFromSets(sh).persist()
-        val cand = Dedup.minhashCandidates(sigs, minEstJaccard = 0.3)
-          .select("id_a", "id_b")
-        (Dedup.ngramJaccardSets(cand, sh), () => { sigs.unpersist(); () })
-      case None =>
-        val sc = Dedup.shingleSigSets(keyed, "__cid", textCol).persist()
-        (Dedup.jaccardVerify(Dedup.bandedPairs(sc.select("id", "sig")), sc,
-          minEstJaccard = 0.3), () => { sc.unpersist(); () })
-    }
+    // jaccardVerify est-filters and exact-verifies in one pair pass
+    val sc = Dedup.shingleSigSets(keyed, "__cid", textCol).persist()
+    val verifiedAll = Dedup.jaccardVerify(Dedup.bandedPairs(sc.select("id", "sig")), sc,
+      minEstJaccard = 0.3)
     // verified pairs are emitted with id_a < id_b, so id_b is the loser.
     // The loser set must be EAGERLY materialized with its lineage CUT
     // before the shingle scratch is unpersisted: a merely-persisted child
@@ -100,7 +80,7 @@ object Curation {
       if (docs.sparkSession.sparkContext.getCheckpointDir.isDefined)
         verified.checkpoint()
       else verified.localCheckpoint()
-    release()
+    sc.unpersist()
 
     docs.select(
         (if (idIsNumeric) col(idCol).cast("long") else col(idCol)).as("doc_id"),

@@ -42,7 +42,7 @@ object Extract {
     val narrow = pages.select("url", "html")
     val parted =
       if (conf.shufflePartitions > 0)
-        Salting.saltedRepartition(narrow, conf.shufflePartitions, heavyHosts, conf.saltBuckets)
+        Salting.saltedRepartition(narrow, conf.shufflePartitions, heavyHosts)
       else narrow
     parted.as[(String, Array[Byte])].mapPartitions { it =>
       val digest = java.security.MessageDigest.getInstance("SHA-256")

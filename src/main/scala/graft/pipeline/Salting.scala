@@ -8,13 +8,16 @@ import org.apache.spark.sql.functions._
   *
   * Web-crawl rows are heavily host-skewed (one host can be 20%+ of a crawl).
   * Plan: derive `host = parse_url(url, 'HOST')`; detect heavy hitters with a
-  * cheap column-pruned sampled count; give each heavy host `saltBuckets`
+  * cheap column-pruned sampled count; give each heavy host `SaltBuckets`
   * sub-keys (`pmod(xxhash64(url), S)`), everything else salt 0; repartition
   * on `(host, salt)`. AQE skew handling remains the backstop for residual
   * skew; this bounds the worst partition BEFORE the expensive extraction
   * stage rather than after a skewed shuffle materializes.
   */
 object Salting {
+
+  /** Sub-keys per heavy host. */
+  val SaltBuckets = 8
 
   def hostCol(url: Column): Column = parse_url(url, lit("HOST"))
 
@@ -49,18 +52,16 @@ object Salting {
     } finally grouped.unpersist()
   }
 
-  /** Salt column: heavy hosts fan out over `saltBuckets`, others stay 0. */
-  def saltCol(url: Column, heavyHosts: Seq[String], saltBuckets: Int): Column =
+  /** Salt column: heavy hosts fan out over `SaltBuckets`, others stay 0. */
+  def saltCol(url: Column, heavyHosts: Seq[String]): Column =
     if (heavyHosts.isEmpty) lit(0)
     else when(hostCol(url).isin(heavyHosts: _*),
-      pmod(xxhash64(url), lit(saltBuckets.toLong)).cast("int")).otherwise(lit(0))
+      pmod(xxhash64(url), lit(SaltBuckets.toLong)).cast("int")).otherwise(lit(0))
 
   /** Repartition on (host, salt): co-locates a host's rows (politeness /
     * downstream host-level aggregation) while bounding the heavy hosts.
     */
   def saltedRepartition(pages: DataFrame, partitions: Int,
-                        heavyHosts: Seq[String], saltBuckets: Int): DataFrame = {
-    pages.repartition(partitions,
-      hostCol(col("url")), saltCol(col("url"), heavyHosts, saltBuckets))
-  }
+                        heavyHosts: Seq[String]): DataFrame =
+    pages.repartition(partitions, hostCol(col("url")), saltCol(col("url"), heavyHosts))
 }

@@ -2,6 +2,7 @@ package graft.render
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.model.Thresholds
 
 /** Batch summary + catalog queries over the extracted table
   * (SURVEY A2/A4/L1-L4) — pure column expressions; the reference's
@@ -52,6 +53,6 @@ object Summary {
       .withColumn("has_text", col("text_len") > 0)
       .withColumn("has_tables", size(col("tables")) > 0)
       .withColumn("is_empty", col("text_len") === 0 && size(col("tables")) === 0)
-      .withColumn("is_high_quality", col("confidence") >= lit(80.0))
-      .withColumn("meets_threshold", col("confidence") >= lit(60.0))
+      .withColumn("is_high_quality", col("confidence") >= lit(Thresholds.HighQuality))
+      .withColumn("meets_threshold", col("confidence") >= lit(Thresholds.MediumQuality))
 }

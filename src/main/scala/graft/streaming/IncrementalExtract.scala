@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.model.PipelineConf
 import graft.pipeline.Extract
 
 /** Incremental extraction via Structured Streaming (SURVEY §1.2: the
@@ -15,15 +14,11 @@ import graft.pipeline.Extract
   * from Spark's streaming checkpoint (file-source offsets + file-sink
   * transaction log) — the batch-side manifest (pipeline.Checkpoint) covers
   * the reprocess-by-fingerprint case; this covers the append-only tail.
-  *
-  * `maxFilesPerTrigger` bounds a micro-batch for steady-state latency when
-  * running with `Trigger.ProcessingTime` instead.
   */
 object IncrementalExtract {
 
   def start(spark: SparkSession, inDir: String, outDir: String,
-            checkpointDir: String, conf: PipelineConf = PipelineConf(),
-            availableNow: Boolean = true): StreamingQuery = {
+            checkpointDir: String): StreamingQuery = {
     graft.io.PathGuard.checkWritable(outDir)
     graft.io.PathGuard.checkWritable(checkpointDir)
     val pages = spark.readStream
@@ -34,13 +29,13 @@ object IncrementalExtract {
     // by file; no runtime shuffle in the hot path
     val extracted = Extract.runNarrow(pages).toDF()
 
-    val writer = extracted.writeStream
+    extracted.writeStream
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
-
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+      .trigger(Trigger.AvailableNow())
+      .start()
   }
 
   /** Run one AvailableNow drain to completion; returns rows visible after. */

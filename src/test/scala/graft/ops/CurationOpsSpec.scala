@@ -28,11 +28,7 @@ class CurationOpsSpec extends AnyFunSuite {
     assert(out("c" * 64) != "dup")
   }
 
-  test("curate with caller-supplied shingle scratch matches the self-built path") {
-    // the production pairing: MinHash dedup and curation in one session
-    // over the same corpus — the tokenize pass (shingleSets) is paid once
-    // and shared. Verdicts must be identical to the self-built path, and
-    // curate must NOT release the caller's scratch.
+  test("curate keys numeric doc ids as long: one of a near-dup pair loses") {
     val body = "one two three four five six seven eight nine ten eleven " * 6
     val docs = Seq(
       (10L, body + "tail alpha"),
@@ -40,17 +36,10 @@ class CurationOpsSpec extends AnyFunSuite {
       (12L, "totally different content about rivers mountains weather " +
         "markets harvests travels letters music gardens seasons " * 5))
       .toDF("doc_id", "text")
-    val sh = Dedup.shingleSets(docs, "doc_id", "text").persist()
-    try {
-      val shared = Curation.curate(docs, sharedShingles = Some(sh))
-        .orderBy("doc_id").collect().toSeq
-      val own = Curation.curate(docs).orderBy("doc_id").collect().toSeq
-      assert(shared == own)
-      val v = shared.map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(Seq(v(10L), v(11L)).count(_ == "dup") == 1, s"verdicts: $v")
-      assert(v(12L) != "dup")
-      assert(sh.storageLevel.useMemory, "curate released the caller's scratch")
-    } finally sh.unpersist()
+    val v = Curation.curate(docs).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(Seq(v(10L), v(11L)).count(_ == "dup") == 1, s"verdicts: $v")
+    assert(v(12L) != "dup")
   }
 
   test("chunkWords: 12-word chunks, remainder kept, 1-based slicing") {

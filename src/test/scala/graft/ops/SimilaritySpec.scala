@@ -50,7 +50,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(math.abs(top(0).getDouble(1) - 1.0) < 1e-9)
   }
 
-  test("IVF with all lists probed == brute force; mean recall@8 ≥ 0.5") {
+  test("IVF with all lists probed == brute force; mean recall@8 ≥ 0.6") {
     val index = Similarity.buildIvf(emb, "vec_id", "embedding", numLists = 16)
     val bf = Similarity.bruteForceTopK(emb, "vec_id", "embedding", queryVec, 10)
       .collect().map(_.getAs[Number]("vec_id").longValue).toSet
@@ -63,9 +63,9 @@ class SimilaritySpec extends AnyFunSuite {
     // the data draw, not the index (uniform-random vectors are IVF's worst
     // case: the round-6 regenerated corpus read 0.2 where the previous one
     // read 0.5+ at the same nprobe). Gate the MEAN over 10 query vectors at
-    // half the lists probed instead — measured 0.72 on the current corpus,
-    // stable to regeneration, and still a real locality claim (random
-    // placement would read ~nprobe/numLists = 0.5 with no margin).
+    // half the lists probed instead — measured 0.72 on the current corpus.
+    // Random placement reads ~nprobe/numLists = 0.5, so the gate sits a
+    // clear margin above that null: a real locality claim.
     val queries = (0L until 10L).map { qid =>
       emb.where(col("vec_id") === qid)
         .select(col("embedding").cast("array<double>")).as[Array[Double]].head()
@@ -78,7 +78,7 @@ class SimilaritySpec extends AnyFunSuite {
       probed.intersect(exact).size.toDouble / exact.size
     }
     val mean = recalls.sum / recalls.size
-    assert(mean >= 0.5, s"mean recall@nprobe=8 = $mean (${recalls.mkString(",")})")
+    assert(mean >= 0.6, s"mean recall@nprobe=8 = $mean (${recalls.mkString(",")})")
   }
 
   test("persisted IVF probe is a partition-pruned scan (only nprobe lists read)") {

@@ -78,7 +78,7 @@ class CheckpointSpec extends AnyFunSuite {
     val p = conf.shufflePartitions
     val heavy = Salting.detectHeavyHosts(pages, sampleFraction = 1.0)
     assert(heavy.nonEmpty, "the corpus must be host-skewed")
-    val salted = maxMean(Salting.saltedRepartition(pages, p, heavy, conf.saltBuckets))
+    val salted = maxMean(Salting.saltedRepartition(pages, p, heavy))
     Seq(16, 4).foreach { n =>
       val placed = Checkpoint.placeByBucket(
         pages.withColumn("bucket", Checkpoint.bucketCol(col("url"), n)), 0 until n, p)

@@ -71,7 +71,7 @@ class PipelineSpec extends AnyFunSuite {
     val heavy = Salting.detectHeavyHosts(pages, shareThreshold = 0.05, sampleFraction = 1.0)
     assert(heavy == Seq("big.example.com")) // ~20% of rows by construction
 
-    val salts = pages.select(Salting.saltCol(col("url"), heavy, 8).as("salt"),
+    val salts = pages.select(Salting.saltCol(col("url"), heavy).as("salt"),
         Salting.hostCol(col("url")).as("host"))
       .where(col("host") === "big.example.com")
       .select("salt").distinct().collect().map(_.getInt(0)).sorted
@@ -81,7 +81,7 @@ class PipelineSpec extends AnyFunSuite {
     val p = 16
     import PipelineSpec.maxMean
     val unsalted = pages.select("url").repartition(p, Salting.hostCol(col("url")))
-    val salted = Salting.saltedRepartition(pages.select("url"), p, heavy, 8)
+    val salted = Salting.saltedRepartition(pages.select("url"), p, heavy)
     assert(maxMean(salted) < maxMean(unsalted))
   }
 

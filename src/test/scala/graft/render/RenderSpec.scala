@@ -1,7 +1,7 @@
 package graft.render
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.model.{ExtractedDoc, TableRow}
+import graft.model.{ExtractedDoc, TableRow, Thresholds}
 
 class RenderSpec extends AnyFunSuite {
 
@@ -33,5 +33,24 @@ class RenderSpec extends AnyFunSuite {
     val md = Markdown.renderTable(t)
     assert(md ==
       "| h1 | h\\|2 |\n| --- | --- |\n| only |  |\n")
+  }
+
+  test("availability flags switch exactly at the Thresholds boundaries") {
+    val spark = graft.TestSpark.spark
+    import spark.implicits._
+    val confs = Seq(59.9, 60.0, 79.9, 80.0)
+    val rows = confs.zipWithIndex.map { case (c, i) =>
+      doc.copy(url = s"https://h1.example.com/p/$i", confidence = c) }
+    val flags = Summary.withAvailabilityFlags(rows.toDS().toDF())
+      .select("confidence", "meets_threshold", "is_high_quality").collect()
+      .map(r => r.getDouble(0) -> (r.getBoolean(1), r.getBoolean(2))).toMap
+    assert(flags.keySet == confs.toSet)
+    confs.foreach { c =>
+      assert(flags(c) == (c >= Thresholds.MediumQuality, c >= Thresholds.HighQuality), s"confidence $c")
+    }
+    assert(flags(59.9) == (false, false))
+    assert(flags(60.0) == (true, false))
+    assert(flags(79.9) == (true, false))
+    assert(flags(80.0) == (true, true))
   }
 }
